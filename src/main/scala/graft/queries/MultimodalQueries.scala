@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 import graft.ops.MultimodalOps
+import graft.streaming.StreamFace
 import graft.tables.Tables
 
 /** Multimodal-column plumbing over a deterministic asset table derived from
@@ -521,30 +522,15 @@ object MultimodalQueries {
          |       AS BIGINT) AS wsum
          |FROM c ORDER BY asset_id""".stripMargin
     }) { (s, dir) =>
-      val stage = java.nio.file.Files.createTempDirectory("graft-mmsstage-").toString
-      val ckpt = java.nio.file.Files.createTempDirectory("graft-mmsckpt-").toString
-      val out = java.nio.file.Files.createTempDirectory("graft-mmsout-").toString
       val assets = MultimodalOps.pngAssetsFromDocuments(Tables(s, dir, "documents"))
         .localCheckpoint(false) // encode once; both batch writes read it
       val assetSchema = assets.schema
-      val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try {
-        def drain(): Unit =
-          MultimodalOps.pngPositionalFeatures(
-              s.readStream.schema(assetSchema).parquet(stage).toDF())
-            .writeStream.option("checkpointLocation", ckpt)
-            .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .format("parquet").option("path", out)
-            .start().awaitTermination()
-        assets.filter(col("asset_id") % 2 === 0)
-          .write.mode("append").parquet(stage)
-        drain()
-        assets.filter(col("asset_id") % 2 === 1)
-          .write.mode("append").parquet(stage)
-        drain()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+      val feeds = Seq(0, 1).map(r => (stage: String) =>
+        assets.filter(col("asset_id") % 2 === r).write.mode("append").parquet(stage))
+      val out = StreamFace.toParquet(s, feeds) { (fs, stage) =>
+        MultimodalOps.pngPositionalFeatures(
+          fs.readStream.schema(assetSchema).parquet(stage).toDF())
+      }
       s.read.parquet(out)
         .select(col("asset_id"), col("format"), col("n_px"), col("mean_val"),
           concat_ws(",", col("head")).as("head_csv"), col("wsum"))

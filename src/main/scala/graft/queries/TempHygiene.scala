@@ -8,32 +8,21 @@ import java.util.Comparator
   * bench starts from empty); across many Verify/Bench/test runs the leaked
   * directories accumulate into filesystem pressure that shows up as
   * bench-to-bench variance. Swept at harness startup only — never while a
-  * session is using them — and only our own prefixes. */
+  * session is using them — and only our own prefixes. The streaming faces
+  * share one prefix, [[graft.streaming.StreamFace.Prefix]]: one root per
+  * face call, whose `out/` is left for this sweep. */
 object TempHygiene {
   private val Prefixes = Seq(
     "graft-engine-q-", "graft-engine-fx-", "graft-stage-", "graft-ckpt-",
-    "graft-canon-", "graft-rstage-", "graft-rckpt-",
-    // streaming-face lifecycle queries (session/rate/window/dedup staging,
-    // checkpoint, and sink dirs) + persisted ANN quantizers. NOT a
+    "graft-canon-",
+    // every streaming face's root (its out/ outlives the call). NOT a
     // "graft-" catch-all: GenScale writes its scaled datasets to
     // /tmp/graft-sf<N> and a catch-all would sweep them mid-experiment.
-    "graft-sstage-", "graft-sckpt-", "graft-sout-",
-    "graft-rtstage-", "graft-rtckpt-", "graft-rtout-",
-    "graft-wstage-", "graft-wckpt-", "graft-wout-",
-    "graft-ddstage-", "graft-ddckpt-", "graft-ddout-",
-    "graft-dfstage-", "graft-dfckpt-", "graft-dfout-",
-    "graft-slstage-", "graft-slckpt-", "graft-slout-",
-    "graft-sjstage-", "graft-sjckpt-", "graft-sjout-",
-    "graft-sdstage-", "graft-sdckpt-", "graft-sdout-",
-    "graft-fnstage-", "graft-fnckpt-", "graft-fnout-",
-    "graft-fwstage-", "graft-fwckpt-", "graft-fwout-",
+    graft.streaming.StreamFace.Prefix,
     "graft-incidx-", // corpus band index, re-staged per JVM; oracle never reads it
     "graft-subidx-", // substring window-hash index, same staging contract
     "graft-lineidx-", // line-hash index, same staging contract
     "graft-mmstage-", // planted multimodal asset corpora, same staging contract
-    "graft-mmsstage-", "graft-mmsckpt-", "graft-mmsout-", // streaming asset ingest face
-    "graft-warcstage-", "graft-warcckpt-", "graft-warcout-", // streaming WARC ingest face
-    "graft-zststage-", "graft-zstckpt-", "graft-zstout-", // streaming zstd ingest face
     // streaming incremental dedup (engine_stream_incremental): per-run
     // working index / stage / checkpoint / output, plus the per-JVM
     // epoch-form template

@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 import graft.ops.{HtmlOps, QualityModelOps, TextOps}
+import graft.streaming.StreamFace
 import graft.tables.Tables
 
 /** Text-analysis operators over the `documents` table, each oracle-checked:
@@ -707,38 +708,22 @@ object TextQueries {
          |FROM documents ORDER BY asset_id""".stripMargin) { (s, dir) =>
       import graft.ops.MultimodalOps
       graft.functions.GraftFunctions.register(s)
-      val stage = java.nio.file.Files.createTempDirectory("graft-warcstage-").toString
-      val ckpt = java.nio.file.Files.createTempDirectory("graft-warcckpt-").toString
-      val out = java.nio.file.Files.createTempDirectory("graft-warcout-").toString
       val assets = MultimodalOps.warcAssetsFromDocuments(
           Tables(s, dir, "documents"))
         .localCheckpoint(false) // encode once; both batch writes read it
       val assetSchema = assets.schema
-      val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try {
-        def drain(): Unit =
-          MultimodalOps.warcTexts(
-              s.readStream.schema(assetSchema).parquet(stage).toDF())
-            .select(col("asset_id"), col("n_records"), col("n_responses"),
-              length(col("text")).cast("long").as("n_chars"),
-              TextOps.tokens(col("text")).as("_t"))
-            .select(col("asset_id"), col("n_records"), col("n_responses"),
-              col("n_chars"),
-              size(col("_t")).cast("long").as("n_tokens"),
-              TextOps.fingerprint(col("_t")).as("fp"))
-            .writeStream.option("checkpointLocation", ckpt)
-            .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .format("parquet").option("path", out)
-            .start().awaitTermination()
-        assets.filter(col("asset_id") % 2 === 0)
-          .write.mode("append").parquet(stage)
-        drain()
-        assets.filter(col("asset_id") % 2 === 1)
-          .write.mode("append").parquet(stage)
-        drain()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+      val feeds = Seq(0, 1).map(r => (stage: String) =>
+        assets.filter(col("asset_id") % 2 === r).write.mode("append").parquet(stage))
+      val out = StreamFace.toParquet(s, feeds) { (fs, stage) =>
+        MultimodalOps.warcTexts(fs.readStream.schema(assetSchema).parquet(stage).toDF())
+          .select(col("asset_id"), col("n_records"), col("n_responses"),
+            length(col("text")).cast("long").as("n_chars"),
+            TextOps.tokens(col("text")).as("_t"))
+          .select(col("asset_id"), col("n_records"), col("n_responses"),
+            col("n_chars"),
+            size(col("_t")).cast("long").as("n_tokens"),
+            TextOps.fingerprint(col("_t")).as("fp"))
+      }
       s.read.parquet(out).orderBy("asset_id")
     },
 
@@ -857,38 +842,22 @@ object TextQueries {
          |FROM documents ORDER BY asset_id""".stripMargin) { (s, dir) =>
       import graft.ops.MultimodalOps
       graft.functions.GraftFunctions.register(s)
-      val stage = java.nio.file.Files.createTempDirectory("graft-zststage-").toString
-      val ckpt = java.nio.file.Files.createTempDirectory("graft-zstckpt-").toString
-      val out = java.nio.file.Files.createTempDirectory("graft-zstout-").toString
       val assets = MultimodalOps.zstdAssetsFromDocuments(
           Tables(s, dir, "documents"))
         .localCheckpoint(false) // encode once; both batch writes read it
       val assetSchema = assets.schema
-      val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try {
-        def drain(): Unit =
-          MultimodalOps.zstdText(
-              s.readStream.schema(assetSchema).parquet(stage).toDF())
-            .select(col("asset_id"), col("n_frames"), col("n_skippable"),
-              length(col("text")).cast("long").as("n_chars"),
-              TextOps.tokens(col("text")).as("_t"))
-            .select(col("asset_id"), col("n_frames"), col("n_skippable"),
-              col("n_chars"),
-              size(col("_t")).cast("long").as("n_tokens"),
-              TextOps.fingerprint(col("_t")).as("fp"))
-            .writeStream.option("checkpointLocation", ckpt)
-            .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .format("parquet").option("path", out)
-            .start().awaitTermination()
-        assets.filter(col("asset_id") % 2 === 0)
-          .write.mode("append").parquet(stage)
-        drain()
-        assets.filter(col("asset_id") % 2 === 1)
-          .write.mode("append").parquet(stage)
-        drain()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+      val feeds = Seq(0, 1).map(r => (stage: String) =>
+        assets.filter(col("asset_id") % 2 === r).write.mode("append").parquet(stage))
+      val out = StreamFace.toParquet(s, feeds) { (fs, stage) =>
+        MultimodalOps.zstdText(fs.readStream.schema(assetSchema).parquet(stage).toDF())
+          .select(col("asset_id"), col("n_frames"), col("n_skippable"),
+            length(col("text")).cast("long").as("n_chars"),
+            TextOps.tokens(col("text")).as("_t"))
+          .select(col("asset_id"), col("n_frames"), col("n_skippable"),
+            col("n_chars"),
+            size(col("_t")).cast("long").as("n_tokens"),
+            TextOps.fingerprint(col("_t")).as("fp"))
+      }
       s.read.parquet(out).orderBy("asset_id")
     },
 
